@@ -1,5 +1,6 @@
 """Benchmark runner — headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+$SPARK_GRAFT_CPUS defaults to the cores this process may run on.
 
 Prints ONE JSON line:
   {"metric": "turns_per_sec_extraction", "value": N, "unit": "sec"-keyed
@@ -20,7 +21,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(
+    len(os.sched_getaffinity(0)))
 
 
 def _sf(sf_dir: str) -> float:
@@ -139,7 +141,8 @@ def main() -> None:
           .collect())
     timed("scrub_boilerplate",
           lambda: corpus.scrub_boilerplate(spark, SF_DIR)
-          .agg(F.sum("kept_lines")).collect())
+          .agg(F.sum("kept_lines"), F.sum(F.length("scrubbed_text")))
+          .collect())
 
     def _semantic():
         # returns a persisted pair set (caller-owns-release contract)

@@ -29,11 +29,50 @@ def job_factory(spark, sf_small, tmp_path):
 def _table(job):
     return (
         job.read_output()
-        .select("conv_id", "turn_idx", "extracted_text")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
+        .select("conv_id", "turn_idx", "extracted_text", "spans", "error")
+        .orderBy("conv_id", "turn_idx")
+        .collect()
     )
+
+
+_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+def _graph_names(cluster) -> set[str]:
+    nodes, kids = cluster.childNodes(), cluster.childClusters()
+    out = {cluster.name()}
+    out |= {nodes.apply(i).name() for i in range(nodes.size())}
+    for i in range(kids.size()):
+        out |= _graph_names(kids.apply(i))
+    return out
+
+
+def _run_grouped(spark, gid: str, fn):
+    """``fn()`` with every Spark job it starts tagged with job group
+    ``gid``; -> (its result, [(tasks, reads the scan)] for each stage
+    of the group that runs MapInPandas), read off the status store's
+    per-stage operation graphs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(gid, gid)
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    hops = {}
+    for jid in tracker.getJobIdsForGroup(gid):
+        for sid in tracker.getJobInfo(jid).stageIds:
+            graph = store.operationGraphForStage(sid)
+            names = _graph_names(graph.rootCluster())
+            if "MapInPandas" in names:
+                hops[sid] = (tracker.getStageInfo(sid).numTasks,
+                             "FileScanRDD" in names)
+    return res, sorted(hops.values())
+
+
+def _splits(spark, path: str) -> int:
+    return spark.read.parquet(path).rdd.getNumPartitions()
 
 
 def test_single_run_commits_everything(job_factory):
@@ -56,12 +95,20 @@ def test_crash_resume_equals_single_run(spark, job_factory):
     committed = set(job.sink.committed())
     assert committed and len(committed) < 8
 
-    # Q2: leftover 'processing' states are recovered, re-run completes
-    res2 = job.run()
+    # Q2: leftover 'processing' states are recovered, re-run completes.
+    # The resume restages fewer rows than its splits' Arrow batches, so
+    # its hop runs in ceil(rows / batch) tasks behind an exchange.
+    rows = sum(fp["input_rows"] for fp in
+               job.input_fingerprints(job.pending_partitions()).values())
+    res2, hops = _run_grouped(spark, "resume", job.run)
     assert res2["status"] == "ok"
+    batch = int(spark.conf.get(_BATCH))
+    assert hops and all(
+        tasks == -(-rows // batch) and not reads_scan
+        for tasks, reads_scan in hops
+    ), (rows, hops)
     assert set(job.sink.committed()) == set(range(8))
-    got = _table(job)
-    assert got.equals(expected)
+    assert _table(job) == expected
     # no duplicates after resume
     dup = (
         job.read_output()
@@ -372,3 +419,55 @@ def test_staging_swept_after_runs_and_crashes(job_factory):
     res = job.run()
     assert res["status"] == "ok"
     assert os.listdir(job.sink.staging_root) == []
+
+
+def test_incremental_restage_below_one_batch_runs_one_python_task(
+    spark, sf_small, tmp_path
+):
+    """An append that restages fewer rows than one Arrow batch runs
+    the extraction hop in ONE Python task, not one per input split —
+    each task pays the same worker set-up whatever its row count."""
+    import os
+    import shutil
+
+    src = str(tmp_path / "one_in")
+    os.makedirs(src)
+    shutil.copy(f"{sf_small}/transcripts.parquet", src)
+    job = ExtractionJob(spark, src, str(tmp_path / "one_out"), 8)
+    job.run()
+    spark.createDataFrame(
+        [("conv00000001", 900 + i, "user", f"appended turn {i}", None, None)
+         for i in range(3)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    ).coalesce(1).write.mode("append").parquet(src)
+
+    res, hops = _run_grouped(
+        spark, "sized-incremental", lambda: job.run(incremental=True))
+    (pid,) = res["committed"]
+    assert job.sink.committed()[pid]["metrics"]["input_rows"] < int(
+        spark.conf.get(_BATCH))
+    assert _splits(spark, src) > 1  # without sizing: one task per split
+    assert hops and all(tasks == 1 for tasks, _ in hops), hops
+    assert not any(reads_scan for _, reads_scan in hops), hops
+
+
+def test_cold_run_filling_its_splits_keeps_the_shuffle_free_hop(
+    spark, sf_small, job_factory
+):
+    """A cold run over at least cores x batch rows keeps today's plan:
+    the hop runs in the scan's stage, one task per input split, with no
+    exchange before it."""
+    path = f"{sf_small}/transcripts.parquet"
+    old = spark.conf.get(_BATCH)
+    spark.conf.set(_BATCH, "1024")
+    try:
+        rows = spark.read.parquet(path).count()
+        assert rows >= spark.sparkContext.defaultParallelism * 1024
+        job = job_factory("cold-sized")
+        _, hops = _run_grouped(spark, "sized-cold", job.run)
+    finally:
+        spark.conf.set(_BATCH, old)
+    assert hops and all(reads_scan for _, reads_scan in hops), hops
+    assert {tasks for tasks, _ in hops} == {_splits(spark, path)}
+

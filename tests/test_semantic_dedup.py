@@ -273,3 +273,55 @@ def test_kmeans_recovers_separable_mixture(spark):
     pairs.unpersist()
     assert prows  # within-component near-dups exist at 0.9
     assert all(comp_of[r.id_a] == comp_of[r.id_b] for r in prows)
+
+
+def _raising(df, col: str):
+    """``df`` whose ``col`` raises on every row when evaluated."""
+    return df.withColumn(
+        col,
+        F.when(F.col(col).isNotNull(), F.raise_error(F.lit("injected")))
+        .otherwise(F.col(col)),
+    )
+
+
+def test_failed_materialization_releases_its_persist(spark, monkeypatch):
+    """A persisted result whose materializing count fails is released
+    before the error propagates: the k-means assignment and the
+    within-cluster pair set leave getPersistentRDDs() and the session's
+    cache entries as they found them."""
+    import random
+
+    from v2_ocr_spark.operators import similarity
+
+    rng = random.Random(11)
+    emb = with_unit_norm(spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(40)],
+        "vec_id bigint, embedding array<double>",
+    )).select("vec_id", "unit")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def persisted():
+        # RDDs less the centroid tables' local checkpoints (the
+        # result's lineage, released once unreferenced), and the
+        # DataFrame cache entries: a failure before the cached RDD is
+        # built still leaves its entry behind
+        rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+        return (sum(not r.rdd().isLocallyCheckpointed() for r in rdds),
+                cache.numCachedEntries())
+
+    before = persisted()
+    assign = similarity._assign_euclid
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "_assign_euclid",
+                  lambda e, c: _raising(assign(e, c), "cell_id"))
+        with pytest.raises(Exception, match="injected"):
+            kmeans_assign_for(emb, k=2, n_iter=0)
+    assert persisted() == before
+
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "_dot_pd_once", lambda a, b: F.when(
+            a.isNotNull(), F.raise_error(F.lit("injected"))
+        ).cast("double"))
+        with pytest.raises(Exception, match="injected"):
+            semantic_near_dup_pairs_for(emb, k=2, n_iter=0, threshold=0.5)
+    assert persisted() == before

@@ -14,8 +14,12 @@ Reference parity:
 
 Scale notes (100 TB / 10^12 turns):
   * This stage is embarrassingly parallel: no groupBy, no join, no
-    shuffle. Parallelism == input splits; Parquet/Iceberg split sizing
-    (spark.sql.files.maxPartitionBytes) is the only knob.
+    shuffle. Its parallelism is its input's: input splits, sized by
+    spark.sql.files.maxPartitionBytes. The caller sizes a small input
+    to its rows: ExtractionJob repartitions a restage of fewer rows
+    than splits x maxRecordsPerBatch into ceil(rows /
+    maxRecordsPerBatch) tasks (pipeline/runner.py), since each Python
+    task pays a fixed worker set-up whatever its row count.
   * Catalyst prunes the scan to exactly (conv_id, turn_idx, role,
     text, tool) — check ReadSchema in .explain().
   * Long-conversation skew does NOT affect this stage (rows are

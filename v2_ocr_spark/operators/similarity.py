@@ -28,6 +28,19 @@ from pyspark.sql.types import ArrayType, DoubleType
 from pyspark.sql.window import Window
 
 
+def _materialized(df: DataFrame) -> DataFrame:
+    """``df`` persisted and counted, for a caller that owns its release.
+    If the count fails the persist is released before the error
+    propagates: nobody would own it otherwise."""
+    df = df.persist()
+    try:
+        df.count()
+    except BaseException:
+        df.unpersist()
+        raise
+    return df
+
+
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
@@ -415,8 +428,7 @@ def srp_lsh_topk(
     # (small) top-k result is materialized, so no n_tables x corpus
     # signature table outlives the call (the leak class ADVICE r3
     # flagged on the dedup path)
-    sig = srp_signatures(emb, n_tables, n_bits).persist()
-    sig.count()
+    sig = _materialized(srp_signatures(emb, n_tables, n_bits))
 
     q_sig = sig.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), "table", "bucket"
@@ -441,12 +453,13 @@ def srp_lsh_topk(
         )
     )
     # materialize the k*n_queries result, then RELEASE the signature
-    # table — returning lazily would pin n_tables x corpus rows in
-    # executor storage with no owner (callers never see `sig`)
-    result = _topk(scored, k).persist()
-    result.count()
-    sig.unpersist()
-    return result
+    # table, also on failure — returning lazily would pin n_tables x
+    # corpus rows in executor storage with no owner (callers never see
+    # `sig`)
+    try:
+        return _materialized(_topk(scored, k))
+    finally:
+        sig.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -569,9 +582,7 @@ def kmeans_assign_for(
             cents = _mean_centroids(
                 _assign_euclid(emb, cents)
             ).localCheckpoint(eager=True)
-        result = _assign_euclid(emb, cents).persist()
-        result.count()
-        return result
+        return _materialized(_assign_euclid(emb, cents))
     finally:
         # also on failure mid-loop — a corpus-scale persist must never
         # outlive the call without an owner (the compose cleanup
@@ -594,11 +605,9 @@ def kmeans_clusters(
         n_iter,
     )
     try:
-        out = assigned.select(
-            "vec_id", F.col("cell_id").alias("cluster_id")
-        ).persist()
-        out.count()
-        return out
+        return _materialized(
+            assigned.select("vec_id", F.col("cell_id").alias("cluster_id"))
+        )
     finally:
         assigned.unpersist()
 
@@ -710,6 +719,4 @@ def _cluster_pairs(
             "id_a", "id_b", "cluster_id", F.round("cosine", 6).alias("cosine")
         )
     )
-    result = pairs.persist()
-    result.count()
-    return result
+    return _materialized(pairs)

@@ -31,11 +31,11 @@ def get_spark(
     # serialization amortizes; 8k/16k add nothing further). Worst-case
     # batch memory stays bounded: 4096 rows x 64 KB max turn text
     # = 256 MB per in-flight batch per Python worker.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cores = len(os.sched_getaffinity(0))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(cores)
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        n = cpus if cpus.isdigit() else os.cpu_count() or 8
-        shuffle_partitions = int(n)
+        shuffle_partitions = int(cpus) if cpus.isdigit() else cores
 
     return (
         SparkSession.builder.master(master)
